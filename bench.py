@@ -49,7 +49,8 @@ PROTOCOL = {
     "spark_execution": (
         "full plan to the noop sink (scan+shuffle+agg, no driver "
         "collect); session warmed once per scale point (JVM, file "
-        "listing, codegen); AQE and shuffle width sized to the point"
+        "listing, codegen); AQE and shuffle width sized to the point; "
+        "every run's persisted intermediates released before the next"
     ),
     "duckdb_execution": (
         "the query's oracle SQL, in-process, views over the same "
@@ -233,18 +234,19 @@ def _interleaved_point(
     spark, con, qs, oracles, sf_dir: str, names, n: int = 3
 ) -> tuple[dict[str, float], dict[str, float]]:
     """The ONE timing protocol (see PROTOCOL): per query, alternate
-    spark run / duckdb run n times; min per side."""
+    spark run / duckdb run n times; min per side. A Spark run is
+    construct + execute through ``queries.run``, which releases the
+    query's intermediates after each run."""
+    from data_pipeline_001_spark.plans.queries import run
+
     spark_t: dict[str, float] = {}
     duck_t: dict[str, float] = {}
     for name in names:
         sql = oracles.get(name) if con is not None else None
         sbest, dbest = float("inf"), float("inf")
         for _ in range(n):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            sbest = min(sbest, time.perf_counter() - t0)
+            r = run(spark, qs[name], sf_dir, "noop")
+            sbest = min(sbest, r.construct_s + r.execute_s)
             if sql:
                 t0 = time.perf_counter()
                 con.sql(sql).fetchall()

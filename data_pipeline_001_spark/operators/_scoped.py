@@ -1,89 +1,55 @@
-"""Bounded-intermediate materialization with a QUERY-bounded
-lifetime (guide §5 "unpersist when done").
+"""Bounded-intermediate materialization with a query-scoped release.
 
-Round-11's aged-session finding: operator-level ``persist()`` entries
-accumulate in the CacheManager for the SESSION lifetime — a 308-query
-sweep measured up to 3.5x degradation on late queries purely from
-cache pressure. The operators return lazy frames, so no operator can
-unpersist after "its" action (the action belongs to the caller).
+An operator whose plan references one intermediate from several
+branches (per-doc signature tables, gram tables, oriented edge lists)
+persists it so the branches share one computation. The operators
+return lazy frames, so no operator can unpersist after "its" action:
+the action belongs to the caller. Left to the session, those persists
+accumulate in the CacheManager (a 308-query sweep measured up to 3.5x
+slower late queries from cache pressure alone).
 
-Two designs were measured this round (tools/ab_cache2_r12.py):
-
-- ``localCheckpoint``: blocks are GC-released, but (a) the row-RDD
-  scan loses the columnar InMemoryRelation re-read speed (+7% on
-  dedup_substring_spans, +12% on graph_triangle_stats), and (b) under
-  AQE, ``Dataset.localCheckpoint`` — eager OR lazy — materializes
-  every upstream query stage at CONSTRUCTION time
-  (``AdaptiveSparkPlanExec.execute`` computes the final plan), which
-  turns ten registry queries into construction-job builders and
-  breaks the static sf1 plan gate (the round-8 70-CPU-minute explain
-  pathology). Rejected.
-
-- ``persist`` + RELEASE AT THE NEXT QUERY BOUNDARY (this module):
-  every ``bounded_intermediate`` persist is registered here, and the
-  ``@query`` registry wrapper calls ``release_stale()`` before
-  constructing the next query — by which point every sequential
-  caller (driver, bench, sweep, oracle gate) has finished the prior
-  query's actions. Within one query, any number of operators can
-  materialize intermediates; they all stay live until the next query
-  is constructed. The CacheManager therefore holds at most ONE
-  query's bounded intermediates instead of the whole session's.
-
-Callers that bypass the registry (unit tests driving operators
-directly, streaming sinks maintaining their own state) keep the
-round-11 behavior: the persist lives until they release it or the
-session ends — bounded by their own short lifetimes.
-
-``RELEASE`` exists for the round-12 aged-session canary
-(tools/aged_canary_r12.py) to reproduce the round-11 leak through the
-same code path; ``USE_CHECKPOINT`` keeps the measured-and-rejected
-variant reachable for the A/B harness.
+The caller therefore owns the release. Inside ``cache_scope()``, which
+``plans.queries.run`` opens around construct + execute, every
+``bounded_intermediate`` is registered with the scope and unpersisted
+when the scope exits. Outside a scope it is a plain persist that the
+caller unpersists (or the session ends).
 """
 
 from __future__ import annotations
 
-import threading
+import contextvars
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-USE_CHECKPOINT = False
-RELEASE = True
-
-_LIVE: list[DataFrame] = []
-_PENDING: list[DataFrame] = []
-_LOCK = threading.Lock()
+_SCOPE: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "bounded_intermediates", default=None
+)
 
 
 def bounded_intermediate(df: DataFrame) -> DataFrame:
-    """Materialize-once semantics for a bounded operator intermediate
-    that several plan branches reference (per-doc signature tables,
-    gram tables, oriented edge lists). See module docstring."""
-    if USE_CHECKPOINT:
-        return df.localCheckpoint(eager=False)
+    """Materialize-once semantics for an intermediate that several plan
+    branches reference: a MEMORY_AND_DISK persist (a large corpus
+    spills rather than OOMs), released by the enclosing
+    ``cache_scope()`` if there is one."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    with _LOCK:
-        _PENDING.append(df)
+    held = _SCOPE.get()
+    if held is not None:
+        held.append(df)
     return df
 
 
-def release_stale() -> None:
-    """Unpersist intermediates registered before the previous query
-    boundary and promote the current batch. Called by the ``@query``
-    wrapper at query-construction time — two boundaries after a
-    persist is registered, every sequential caller has consumed it.
-    (One boundary is not enough: the bench constructs query N+1's
-    frame while query N's frame may still be re-executed in its
-    best-of-3 loop only in pathological callers; the two-phase hand-
-    off costs one extra query's worth of cache residency, nothing
-    else.)"""
-    if not RELEASE:
-        return
-    with _LOCK:
-        stale, _LIVE[:] = _LIVE[:], _PENDING[:]
-        _PENDING.clear()
-    for df in stale:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — a dead session is not an error
-            pass
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit, every ``bounded_intermediate`` made inside
+    the block. Scopes nest; each releases only its own."""
+    held: list[DataFrame] = []
+    token = _SCOPE.set(held)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in held:
+            df.unpersist()

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.functions.text import fingerprint
+from data_pipeline_001_spark.operators._scoped import bounded_intermediate
 
 # Mersenne prime 2^31-1: with base hashes and coefficients < 2^31 the
 # products stay under 2^62 — no long overflow under Spark 4 ANSI mode
@@ -177,16 +178,8 @@ def minhash_lsh_pairs(
     per_doc = _minhash_per_doc(
         docs, text_col, id_col, num_hashes, shingle_words, seed
     )
-    # round-12 cache hygiene (guide §5): bounded_intermediate is a
-    # lazy localCheckpoint, not a persist — same one-materialization
-    # semantics, but the blocks are released when the caller drops the
-    # frame instead of living in the CacheManager for the session
-    # lifetime (the round-11 aged-session finding: up to 3.5x
-    # late-session degradation from accumulated operator persists)
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
+    # a persist released by the caller's cache scope (operators/_scoped),
+    # so it does not outlive the query in the CacheManager
     per_doc = bounded_intermediate(per_doc)
     return minhash_pairs_from_per_doc(
         per_doc,
@@ -503,14 +496,7 @@ def ngram_jaccard_pairs(
     # 2k slice) on exactly the quadratic stage. With the per-doc
     # table materialized and its stats known, the small side
     # broadcasts and the pairwise stage stays scan-parallel. Measured
-    # at the 2k slice: 30.0 → 7.6 s best-of-3. Round-12: persist →
-    # bounded_intermediate (localCheckpoint keeps the origin stats,
-    # so the broadcast decision survives; blocks are GC-released
-    # instead of accumulating in the CacheManager — guide §5).
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
+    # at the 2k slice: 30.0 → 7.6 s best-of-3.
     grams = bounded_intermediate(grams)
     l, r = grams.alias("l"), grams.alias("r")
     return (
@@ -760,10 +746,6 @@ def minhash_incremental(
     batch_pd = _minhash_per_doc(
         new_batch, text_col, id_col, num_hashes, shingle_words, seed
     )
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     batch_pd = bounded_intermediate(batch_pd)
     corpus_pd = _minhash_per_doc(
         corpus, text_col, id_col, num_hashes, shingle_words, seed

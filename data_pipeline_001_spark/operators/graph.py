@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_001_spark.operators._scoped import bounded_intermediate
+
 
 def copurchase_edges(
     lineitem: DataFrame,
@@ -86,13 +88,10 @@ def triangle_stats(edges: DataFrame, materialize: bool = True) -> DataFrame:
     cost at sf1. Deriving the edge list once and reading it
     thereafter is also the honest 100 TB shape (edge lists are
     materialized artifacts, not re-derived per pass). Pass False when
-    the caller already persisted the frame; the cache entry lives
-    until the caller unpersists or the session ends."""
+    the caller already persisted the frame. The cache entry lives
+    until the caller's cache scope exits (operators/_scoped), or, with
+    no scope, until the caller unpersists it."""
     if materialize:
-        from data_pipeline_001_spark.operators._scoped import (
-            bounded_intermediate,
-        )
-
         edges = bounded_intermediate(edges)
     deg = degrees(edges)
     e = (
@@ -111,12 +110,6 @@ def triangle_stats(edges: DataFrame, materialize: bool = True) -> DataFrame:
     # referenced twice below (adjacency build + probe side), and each
     # lazy re-derivation would re-run the degree aggregation (a full
     # union+groupBy over 2m rows) as well as the orientation joins.
-    # Round-12: persist → bounded_intermediate (GC-released blocks
-    # instead of a session-lifetime CacheManager entry — guide §5).
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     oriented = bounded_intermediate(
         e.select(
             F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("u"),
@@ -205,10 +198,6 @@ def triangle_estimate(edges: DataFrame, keep_buckets: int = 64) -> DataFrame:
     # materialize the FULL edge list (not the kept subset): the
     # full-count branch and all four sparsified references then share
     # one build of the expensive co-occurrence self-join
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     edges = bounded_intermediate(edges)
     kept = edges.where(coin <= F.lit(hex_max))
     sparse = triangle_stats(kept, materialize=False)

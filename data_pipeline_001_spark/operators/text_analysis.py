@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_001_spark.functions import text as TX
+from data_pipeline_001_spark.operators._scoped import bounded_intermediate
 
 
 def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -707,11 +708,6 @@ def duplicated_substring_spans(
     # per-side column sets differ so ReusedExchange can't kick in —
     # materialize the (id, pos, hk) triples (longs only, never the
     # text) rather than re-running the Arrow hash pass per branch.
-    # Round-12: persist → bounded_intermediate (guide §5).
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     grams = bounded_intermediate(grams)
 
     # "appears in >= 2 docs" as min(id) != max(id): same predicate,
@@ -956,10 +952,6 @@ def line_dedup(
     to a line-hash-sharded join, which is exactly CCNet's sharding
     shape).
     """
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     lines = docs.select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_001_spark.operators._scoped import bounded_intermediate
+
 _PARTIAL_SCHEMA = "i int, j int, val double"
 
 
@@ -74,15 +76,10 @@ def covariance_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """(dim_i, dim_j, cov) — population covariance
     cov = E[xᵢxⱼ] − E[xᵢ]E[xⱼ], rounded to 6 decimals. d² output rows.
     """
-    from data_pipeline_001_spark.operators._scoped import (
-        bounded_intermediate,
-    )
-
     # the Gram/sum/count branches below would each re-derive this agg
     # — and Catalyst does NOT reuse the exchange across them (measured:
     # 4 full corpus scans in the executed plan). Materializing the tiny
-    # (d²+d+1)-row result pins the corpus scan to exactly one pass
-    # (round-12: localCheckpoint, not persist — guide §5).
+    # (d²+d+1)-row result pins the corpus scan to exactly one pass.
     agg = bounded_intermediate(
         _gram_partials(df, vec_col)
         .groupBy("i", "j")

@@ -646,7 +646,9 @@ class WindowPipeline:
         support ``load_all`` (DayPartitionedTableSink).
 
         Returns the per-window audit DataFrame
-        (window_start, source_count, target_count) as FIRST observed;
+        (window_start, source_count, target_count) as FIRST observed,
+        with a row for every planned window (0/0 when it has no source
+        rows, which completes it as matched);
         windows whose initial audit mismatched then run the R3
         adaptive-retry envelope, so the control table holds the final
         per-window outcome (completed, or cleaned + reset).
@@ -662,7 +664,9 @@ class WindowPipeline:
         # map-side partial aggregation, instead of two aggregations
         # plus a full-outer join (which shuffled both sides twice and
         # needed the join's null-coalescing). Window sets that exist
-        # on only one side fall out naturally with a 0 on the other.
+        # on only one side fall out naturally with a 0 on the other;
+        # the spine side gives every planned window a row, so one with
+        # no source rows audits 0/0 instead of staying pending forever.
         src_side = tagged.select(
             F.col("window_ts").alias("window_start"),
             F.lit(1).alias("is_src"),
@@ -680,8 +684,12 @@ class WindowPipeline:
             F.lit(0).alias("is_src"),
             F.lit(1).alias("is_tgt"),
         )
+        spine_side = time_fns.window_spine(
+            self.spark, plan_start, plan_end, self.config.granularity
+        ).select("window_start", F.lit(0).alias("is_src"), F.lit(0).alias("is_tgt"))
         audit = (
             src_side.unionByName(tgt_side)
+            .unionByName(spine_side)
             .groupBy("window_start")
             .agg(
                 F.sum("is_src").alias("source_count"),

@@ -15,11 +15,13 @@ Conventions that make hashes match:
 
 from __future__ import annotations
 
-from typing import Callable
+import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_001_spark.operators._scoped import cache_scope
 from data_pipeline_001_spark.session import load_tables
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -51,6 +53,37 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+class QueryRun(NamedTuple):
+    construct_s: float
+    execute_s: float
+    frame: object = None  # the pandas result when sink="pandas"
+
+
+def run(spark: SparkSession, query_fn: SparkQuery, sf_dir: str, sink: str) -> QueryRun:
+    """The one way to run a query: construct its lazy frame, execute it
+    into ``sink`` ("noop": the full plan into Spark's noop writer;
+    "pandas": ``toPandas()``), then release every intermediate it
+    persisted. Construction (including any driver jobs it launches) and
+    execution are timed separately; the release is not timed.
+
+    The release lives here, not in ``@query``: a registry function
+    returns a lazy frame whose action belongs to its caller, so only
+    the caller knows when the query has finished."""
+    if sink not in ("noop", "pandas"):
+        raise ValueError(f"unknown sink {sink!r}: expected 'noop' or 'pandas'")
+    with cache_scope():
+        t0 = time.perf_counter()
+        df = query_fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        if sink == "noop":
+            df.write.mode("overwrite").format("noop").save()
+            frame = None
+        else:
+            frame = df.toPandas()
+        t2 = time.perf_counter()
+    return QueryRun(t1 - t0, t2 - t1, frame)
 
 
 def _rev():

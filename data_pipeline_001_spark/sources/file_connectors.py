@@ -47,7 +47,8 @@ class FileSource(Source):
 
     ``quarantine_path`` (text formats only): malformed records are
     read PERMISSIVE into ``_corrupt_record``, appended to the
-    quarantine directory as JSON, and EXCLUDED from extract/count —
+    quarantine directory as JSON (once per source instance, however
+    often the files are read), and EXCLUDED from extract/count —
     one bad line degrades to a quarantined row instead of failing the
     window or silently nulling fields. The declared ``schema`` is
     required for quarantine (Spark only populates the corrupt column
@@ -99,6 +100,10 @@ class FileSource(Source):
                     f"options {sorted(clash)} conflict with quarantine_path's "
                     "PERMISSIVE/_corrupt_record reader contract"
                 )
+        # quarantine state: the files whose corrupt records are already
+        # quarantined, and the cached parse of exactly those files
+        self._files: list[str] = []
+        self._parsed: DataFrame | None = None
 
     def _read(self) -> DataFrame:
         from pyspark.sql import types as T
@@ -121,18 +126,7 @@ class FileSource(Source):
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = reader.format(self.fmt).load(self.path)
         if self.quarantine_path is not None:
-            # cache so the split doesn't parse the files twice; keep
-            # every column in the quarantine write — Spark forbids
-            # queries whose only referenced column is _corrupt_record
-            # (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and JSON output drops
-            # the all-null data fields of corrupt rows anyway
-            df = df.cache()
-            # rename on write: a JSON file whose only field is the
-            # reserved _corrupt_record name can't itself be read back
-            df.where(F.col("_corrupt_record").isNotNull()).withColumnRenamed(
-                "_corrupt_record", "corrupt_record"
-            ).write.mode("append").json(self.quarantine_path)
-            df = df.where(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+            df = self._without_corrupt(reader, df)
         # TIMESTAMP(NANOS) parquet columns arrive as long under
         # nanosAsLong — convert to µs timestamps (integer division)
         if isinstance(df.schema[self.ts_col].dataType, T.LongType):
@@ -142,6 +136,40 @@ class FileSource(Source):
         for f in (*self.must_exist, *self.exclude_null):
             df = df.where(F.col(f).isNotNull())
         return df
+
+    def _without_corrupt(self, reader, df: DataFrame) -> DataFrame:
+        """Quarantine the corrupt records of files not read before, and
+        return the valid rows. The parse is cached so count and extract
+        agree on which rows are corrupt (a pruned parse can miss a type
+        error in an unread column) and parse the files once; the cache
+        is rebuilt whenever the file set changes, so new files are seen.
+
+        ``df`` reads the directory while the cached parse reads an
+        explicit file list: the two plans never match in the
+        CacheManager, so ``df.inputFiles()`` is always a fresh listing."""
+        files = sorted(df.inputFiles())
+        if self._parsed is None or files != self._files:
+            new = sorted(set(files) - set(self._files))
+            if new:
+                # keep every column in the quarantine write — Spark
+                # forbids queries whose only referenced column is
+                # _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and
+                # JSON output drops the all-null data fields of corrupt
+                # rows anyway. Rename on write: a JSON file whose only
+                # field is the reserved _corrupt_record name can't itself
+                # be read back
+                reader.format(self.fmt).load(new).where(
+                    F.col("_corrupt_record").isNotNull()
+                ).withColumnRenamed("_corrupt_record", "corrupt_record").write.mode(
+                    "append"
+                ).json(self.quarantine_path)
+            if self._parsed is not None:
+                self._parsed.unpersist()
+            self._parsed = reader.format(self.fmt).load(files).cache()
+            self._files = files
+        return self._parsed.where(F.col("_corrupt_record").isNull()).drop(
+            "_corrupt_record"
+        )
 
     def count(self, start: datetime, end: datetime) -> int:
         return self._read().where(window_predicate(self.ts_col, start, end)).count()

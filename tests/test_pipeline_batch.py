@@ -2,7 +2,7 @@
 to the per-window loop, control table fully merged in one pass,
 dynamic partition overwrite keeps re-runs idempotent."""
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -83,6 +83,30 @@ def test_run_batch_with_unaligned_plan_start(spark, tmp_path):
         assert r["source_query_window_start_time"].minute == 30
     total = pipe.target_sink.read_all().count()
     assert total == pipe.source.count(start, end) > 0
+
+
+def test_run_batch_completes_empty_windows(spark, tables, tmp_path):
+    """Planned windows with no source rows (here: the hours after the
+    last event) get a 0/0 audit row and complete as matched instead of
+    staying pending forever."""
+    source = FileSource(spark, f"{SF_DIR}/events.parquet", ts_col="ts")
+    stage = PartitionedParquetSink(spark, str(tmp_path / "stage"))
+    target = DayPartitionedTableSink(spark, str(tmp_path / "target"))
+    control = ControlTable(spark, str(tmp_path / "control"))
+    cfg = PipelineConfig(pipeline_name="empty", granularity="1h")
+    pipe = WindowPipeline(spark, cfg, source, stage, target, control)
+
+    last = tables["events"].agg(F.max("ts")).first()[0]
+    start = last.replace(minute=0, second=0, microsecond=0)
+    audit = pipe.run_batch(start, start + timedelta(hours=3)).collect()
+    counts = sorted((r["source_count"], r["target_count"]) for r in audit)
+    assert len(counts) == 3
+    assert counts[:2] == [(0, 0), (0, 0)] and counts[2][0] == counts[2][1] > 0
+    ct = control.read().collect()
+    assert len(ct) == 3
+    for r in ct:
+        assert r["pipeline_status"] == "completed", r["source_query_window_start_time"]
+        assert r["count_match_status"] == "matched"
 
 
 def test_shared_control_table_pipelines_are_isolated(spark, tmp_path):

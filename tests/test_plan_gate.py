@@ -27,51 +27,8 @@ def registry():
     return entrymod.queries()
 
 
-def _gate_all(spark, registry, sf):
-    """Gate every registry plan; also record which queries executed
-    driver jobs DURING construction/explain (job-group attribution) —
-    the mechanical membership check for pg.DRIVER_JOB_BUILDERS."""
-    from data_pipeline_001_spark.session import load_tables
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("gate-warmup", "absorb session-init + table-load jobs")
-    spark.range(1).count()  # else the FIRST query inherits init jobs
-    # load_tables' one-time parquet footer reads run small jobs; they
-    # are shared infrastructure, not any query's construction cost —
-    # whichever query iterates first would otherwise be misattributed
-    # as a driver-job builder (q01 absorbed this before round 9)
-    load_tables(spark, sf)
-    violations = {}
-    bnlj_live = set()
-    job_builders = set()
-    for name, fn in registry.items():
-        sc.setJobGroup(f"gate-{name}", name)
-        try:
-            df = fn(spark, sf)
-            plan = pg.simple_plan(df)
-        except Exception as exc:
-            violations[name] = [f"plan build failed: {exc!r:.200}"]
-            continue
-        finally:
-            sc.setJobGroup("gate-idle", "between queries")
-            if tracker.getJobIdsForGroup(f"gate-{name}"):
-                job_builders.add(name)
-        bad = pg.violations_for(name, plan)
-        # round-8: driver-built frames are row-count-probed, not
-        # trusted — a data-sized createDataFrame anywhere in the plan
-        # fails the gate even outside a BNLJ build side
-        if "ExistingRDD" in plan:
-            bad += pg.existing_rdd_violations(df)
-        if bad:
-            violations[name] = bad
-        if name in pg.ALLOWLIST and "BroadcastNestedLoopJoin" in plan:
-            bnlj_live.add(name)
-    return violations, bnlj_live, job_builders
-
-
 def test_no_scale_killers_in_any_registered_plan(spark, registry):
-    violations, bnlj_live, job_builders = _gate_all(spark, registry, SF)
+    violations, bnlj_live, job_builders = pg.gate_registry(spark, registry, SF)
     assert not violations, "\n".join(
         f"{n}: {'; '.join(b)}" for n, b in sorted(violations.items())
     )
@@ -95,7 +52,7 @@ def test_no_scale_killers_in_any_registered_plan(spark, registry):
 
 
 @pytest.mark.slow
-def test_gate_holds_at_replicated_sf1(spark, registry):
+def test_gate_holds_at_replicated_sf1(spark, registry, sf1_dir):
     """Round-9 (verdict task 5): the sf1 gate now covers the WHOLE
     registry except the justified construction-job builders
     (pg.DRIVER_JOB_BUILDERS — explaining those at sf1 executes their
@@ -105,21 +62,15 @@ def test_gate_holds_at_replicated_sf1(spark, registry):
     names, each justified, with membership enforced mechanically by
     the fast gate above. File-size statistics at ~170 MB differ
     enough from sf0.001 to flip broadcast decisions — a strategy
-    that only looks safe at toy scale is caught here. Skips loudly
-    when the generated benchdata is absent
-    (``tools/make_benchdata.py`` creates it)."""
-    import os
-
-    sf1 = "/root/repo/.benchdata/sf1"
-    if not os.path.isdir(sf1):
-        pytest.skip(f"{sf1} not generated (run tools/make_benchdata.py)")
+    that only looks safe at toy scale is caught here. The sf1 point
+    is generated per test session (conftest ``sf1_dir``)."""
     sub = {
         n: fn
         for n, fn in registry.items()
         if n not in pg.DRIVER_JOB_BUILDERS
     }
     assert len(sub) >= 260, f"gated subset shrank unexpectedly: {len(sub)}"
-    violations, _, _ = _gate_all(spark, sub, sf1)
+    violations, _, _ = pg.gate_registry(spark, sub, sf1_dir)
     assert not violations, "\n".join(
         f"{n}: {'; '.join(b)}" for n, b in sorted(violations.items())
     )

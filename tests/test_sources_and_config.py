@@ -168,6 +168,25 @@ def test_json_source_quarantines_malformed_records(spark, tables, tmp_path):
     assert len(quarantined) == 2
     assert any("BROKEN" in r["corrupt_record"] for r in quarantined)
 
+    # re-reading the same files quarantines nothing again
+    assert clean_src.extract(*WINDOW).count() == expected
+    clean_src.count(datetime(2024, 1, 3), datetime(2024, 1, 4))
+    assert spark.read.json(str(tmp_path / "quar")).count() == 2
+
+    # a file that lands after the first read is seen, and only its own
+    # corrupt record is added
+    with open(os.path.join(d, "data2.json"), "w") as fh:
+        for r in rows:
+            rec = r.asDict()
+            rec["event_id"] += 1_000_000
+            rec["ts"] = rec["ts"].isoformat()
+            fh.write(jsonlib.dumps(rec) + "\n")
+        fh.write("{LATE BROKEN\n")
+    assert clean_src.count(*WINDOW) == 2 * expected
+    quarantined = spark.read.json(str(tmp_path / "quar")).collect()
+    assert len(quarantined) == 3
+    assert sum("LATE BROKEN" in r["corrupt_record"] for r in quarantined) == 1
+
 
 def test_quarantine_rejects_conflicting_reader_options(spark, tmp_path):
     """Round-9 (advice): user options are applied after the quarantine

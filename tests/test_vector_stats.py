@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipeline_001_spark.operators._scoped import cache_scope
 from data_pipeline_001_spark.operators.vector_stats import (
     covariance_matrix,
     label_centroids,
@@ -138,10 +139,9 @@ def test_ngram_novelty_distinct_grams(spark):
 
 def test_covariance_plan_no_python_row_udf(tables):
     """mapInPandas (Arrow-batched) is the only Python boundary — no
-    row-at-a-time BatchEvalPython anywhere. Round-12: the partial-agg
-    is materialized behind a local checkpoint, so the Arrow node is
-    asserted on the partials subtree (the final plan reads the
-    checkpoint) and the row-UDF absence on both."""
+    row-at-a-time BatchEvalPython anywhere. The partial-agg is a
+    persisted bounded intermediate, so the Arrow node is asserted on
+    the partials subtree and the row-UDF absence on both."""
     from data_pipeline_001_spark.operators.vector_stats import (
         _gram_partials,
     )
@@ -154,23 +154,58 @@ def test_covariance_plan_no_python_row_udf(tables):
     assert "BatchEvalPython" not in plan
 
 
-def test_covariance_single_corpus_scan(tables):
-    """The n/s/G branches share one MATERIALIZED partial-agg (round-12:
-    a GC-scoped local checkpoint, previously a persist), so the corpus
-    parquet is computed once and every branch reads the checkpoint
-    boundary (4 independent corpus scans before the fix)."""
-    df = covariance_matrix(tables["embeddings"])
-    df.write.mode("overwrite").format("noop").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # all three branches (Gram entries, per-dim sums, count) hit the
-    # materialized boundary, never the raw parquet directly
-    cached_reads = (
-        plan.count("InMemoryTableScan")
-        + plan.count("TableCacheQueryStage")
-        + plan.count("Scan ExistingRDD")
-    )
-    assert cached_reads >= 3, plan
-    assert "Scan parquet" not in plan, plan
+def _parquet_scans(spark, action) -> tuple[int, int]:
+    """(files read, rows read) summed over the parquet scans of the SQL
+    executions ``action()`` runs, from their SQL metrics. A scan shared
+    by several plan nodes (a cached plan) is counted once."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    metrics: dict[int, tuple[str, str]] = {}
+    for ex in executions():
+        if ex.executionId() <= before:
+            continue
+        values = store.executionMetrics(ex.executionId())
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if not node.name().startswith("Scan parquet"):
+                continue
+            for k in range(node.metrics().size()):
+                m = node.metrics().apply(k)
+                v = values.get(m.accumulatorId())
+                if v.isDefined():
+                    metrics[m.accumulatorId()] = (m.name(), v.get())
+
+    def total(name):
+        return sum(int(v.replace(",", "")) for n, v in metrics.values() if n == name)
+
+    return total("number of files read"), total("number of output rows")
+
+
+def test_covariance_single_corpus_scan(spark, tables):
+    """The n/s/G branches share one materialized partial-agg (a
+    bounded_intermediate persist), so a run reads the corpus once, not
+    once per branch (4 independent corpus scans before the fix).
+    Checked at runtime from the parquet scan's SQL metrics."""
+    # an earlier covariance run may have left the same partial-agg
+    # cached outside any scope; start cold so this run has to scan
+    spark.catalog.clearCache()
+    emb = tables["embeddings"]
+    with cache_scope():
+        files, rows = _parquet_scans(
+            spark,
+            lambda: covariance_matrix(emb).write.mode("overwrite").format("noop").save(),
+        )
+    assert files == len(emb.inputFiles()), files
+    assert rows == emb.count(), rows
 
 
 def test_ngram_novelty_exchange_count(tables):

@@ -39,24 +39,13 @@ def main() -> None:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from bench import _dir_bytes
-    from data_pipeline_001_spark.session import (
-        get_spark,
-        load_tables,
-        size_adaptive_execution,
-    )
+    from bench import _prepare_point
+    from data_pipeline_001_spark.plans.queries import run
+    from data_pipeline_001_spark.session import get_spark
 
     spark = get_spark(app_name="bench-best3")
     spark.sparkContext.setLogLevel("ERROR")
-    point_bytes = _dir_bytes(sf_dir)
-    size_adaptive_execution(spark, point_bytes)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(8, min(2048, point_bytes // (8 * 1024 * 1024)))),
-    )
-    # warm: JVM, listing, codegen
-    load_tables(spark, sf_dir)["lineitem"].groupBy("l_returnflag").count(
-    ).write.mode("overwrite").format("noop").save()
+    _prepare_point(spark, sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -75,11 +64,8 @@ def main() -> None:
     for name in names:
         runs = []
         for _ in range(n):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
+            r = run(spark, qs[name], sf_dir, "noop")
+            runs.append(round(r.construct_s + r.execute_s, 3))
         drs = []
         if name in oracles:
             for _ in range(n):

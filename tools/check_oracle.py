@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
@@ -50,8 +51,9 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
+    from data_pipeline_001_spark.plans.queries import run
 
     if vanilla:
         # mimic the correctness driver EXACTLY: a bare session with
@@ -87,7 +89,7 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = run(spark, fn, sf_dir, "pandas").frame
         except Exception:
             print(f"FAIL  {name}: spark raised")
             traceback.print_exc(limit=3)

@@ -32,13 +32,21 @@ the boundedness argument — the documented-bounded cases the round-6
 verdict audited (e.g. Theil-Sen's calendar-bounded spine pair join).
 
 Run standalone for a report: ``python tools/plan_gate.py [sf_dir]``.
-``tests/test_plan_gate.py`` imports ``violations_for`` and fails the
-suite on any non-empty result.
+``tests/test_plan_gate.py`` runs ``gate_registry`` and fails the
+suite on any violation.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_pipeline_001_spark.operators._scoped import cache_scope  # noqa: E402
+from data_pipeline_001_spark.session import load_tables  # noqa: E402
 
 #: query name -> reason its BroadcastNestedLoopJoin build side is
 #: bounded even though the plan tree cannot prove it. Every entry MUST
@@ -351,58 +359,79 @@ def existing_rdd_violations(df, bound: int = _MAX_BOUNDED_ROWS) -> list[str]:
     return out
 
 
-def gate_registry(sf_dir: str, only=None, verbose=True):
-    """(violations, n_checked, n_bnlj_allowed) across the registry."""
-    import sys
-    import time
+def gate_registry(spark, registry, sf_dir: str, verbose: bool = False):
+    """Gate every plan in ``registry`` at ``sf_dir``.
 
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
-    from data_pipeline_001_spark.session import get_spark
-
-    spark = get_spark(app_name="plan_gate", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = entrymod.queries()
+    Returns ``(violations, bnlj_live, job_builders)``: the findings per
+    query; the allowlisted queries whose plan still holds a
+    BroadcastNestedLoopJoin (a dead allowlist entry is one missing
+    here); and the queries that ran driver jobs while their plan was
+    built or explained (job-group attribution: the mechanical
+    membership check for ``DRIVER_JOB_BUILDERS``). Nothing executes, so
+    each query is built and explained inside a cache scope that
+    releases what its construction persisted."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("gate-warmup", "absorb session-init + table-load jobs")
+    spark.range(1).count()  # else the FIRST query inherits init jobs
+    # load_tables' one-time parquet footer reads run small jobs; they
+    # are shared infrastructure, not any query's construction cost —
+    # whichever query iterates first would otherwise be misattributed
+    # as a driver-job builder
+    load_tables(spark, sf_dir)
     violations: dict[str, list[str]] = {}
-    n_bnlj_allowed = 0
+    bnlj_live: set[str] = set()
+    job_builders: set[str] = set()
     t0 = time.time()
-    names = [n for n in registry if not only or n in only]
-    for k, qname in enumerate(names):
-        try:
-            df = registry[qname](spark, sf_dir)
-            plan = simple_plan(df)
-        except Exception as exc:  # plan build crash is a violation too
-            violations[qname] = [f"plan build failed: {exc!r:.200}"]
-            continue
-        bad = violations_for(qname, plan)
-        if "ExistingRDD" in plan:
-            bad += existing_rdd_violations(df)
+    for k, (name, fn) in enumerate(registry.items()):
+        sc.setJobGroup(f"gate-{name}", name)
+        with cache_scope():
+            try:
+                df = fn(spark, sf_dir)
+                plan = simple_plan(df)
+            except Exception as exc:  # plan build crash is a violation too
+                violations[name] = [f"plan build failed: {exc!r:.200}"]
+                continue
+            finally:
+                sc.setJobGroup("gate-idle", "between queries")
+                if tracker.getJobIdsForGroup(f"gate-{name}"):
+                    job_builders.add(name)
+            bad = violations_for(name, plan)
+            # driver-built frames are row-count-probed, not trusted: a
+            # data-sized createDataFrame anywhere in the plan fails
+            if "ExistingRDD" in plan:
+                bad += existing_rdd_violations(df)
         if bad:
-            violations[qname] = bad
-        if qname in ALLOWLIST and "BroadcastNestedLoopJoin" in plan:
-            n_bnlj_allowed += 1
+            violations[name] = bad
+        if name in ALLOWLIST and "BroadcastNestedLoopJoin" in plan:
+            bnlj_live.add(name)
         if verbose and (k + 1) % 50 == 0:
             print(
-                f"  ... {k + 1}/{len(names)} plans "
+                f"  ... {k + 1}/{len(registry)} plans "
                 f"({time.time() - t0:.0f}s)",
                 flush=True,
             )
     if verbose:
         print(
-            f"checked {len(names)} plans in {time.time() - t0:.0f}s; "
+            f"checked {len(registry)} plans in {time.time() - t0:.0f}s; "
             f"{len(violations)} violations; "
-            f"{n_bnlj_allowed} allowlisted BNLJ"
+            f"{len(bnlj_live)} allowlisted BNLJ"
         )
         for n, bad in violations.items():
             for b in bad:
                 print(f"  FAIL {n}: {b}")
-    return violations, len(names), n_bnlj_allowed
+    return violations, bnlj_live, job_builders
 
 
 if __name__ == "__main__":
-    import sys
+    import __spark_entry__ as entrymod
+    from data_pipeline_001_spark.session import get_spark
 
     args = sys.argv[1:]
     sf = args[0] if args else "/root/testdata/sf0.001"
-    vio, n, _ = gate_registry(sf, only=set(args[1:]) or None)
+    only = set(args[1:])
+    spark = get_spark(app_name="plan_gate", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    registry = {n: fn for n, fn in entrymod.queries().items() if not only or n in only}
+    vio, _, _ = gate_registry(spark, registry, sf, verbose=True)
     sys.exit(1 if vio else 0)

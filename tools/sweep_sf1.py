@@ -24,12 +24,14 @@ resume/twins/tail logic.
 from __future__ import annotations
 
 import json
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as mod
+from data_pipeline_001_spark.plans.queries import run
 from data_pipeline_001_spark.session import get_spark, load_tables
 
 
@@ -68,7 +70,7 @@ def main() -> None:
     for f in flags:
         if f.startswith("--only="):
             only = f.split("=", 1)[1].split(",")
-    sf_dir = args[0] if args else "/root/repo/.benchdata/sf1"
+    sf_dir = args[0] if args else os.path.join(REPO, ".benchdata", "sf1")
     out = args[1] if len(args) > 1 else "/tmp/sweep_sf1.json"
     if only is not None:
         _run_only(sf_dir, out, only)
@@ -100,28 +102,17 @@ def main() -> None:
         print(f"resuming past {len(times)} recorded queries", flush=True)
     except (OSError, ValueError):
         pass
-    for name, fn in qs.items():
-        if name in skip:
-            if name not in times:
-                print(f"    skip  {name} (quadratic oracle twin)", flush=True)
-            continue
-        t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            n = df.count()
-            times[name] = round(time.time() - t0, 2)
-            print(f"{times[name]:8.2f}s  {n:>9} rows  {name}", flush=True)
-        except Exception as e:  # noqa: BLE001 — sweep must survive one bad query
-            errors[name] = f"{type(e).__name__}: {e}"[:200]
-            print(f"   ERROR  {name}: {errors[name][:120]}", flush=True)
-        with open(out, "w") as f:
-            json.dump({"times": times, "errors": errors}, f, indent=1, sort_keys=True)
+    for name in qs:
+        if name in skip and name not in times:
+            print(f"    skip  {name} (quadratic oracle twin)", flush=True)
+    _sweep(spark, qs, sf_dir, [n for n in qs if n not in skip], times, errors, out=out)
     # quadratic oracle twins at a BOUNDED slice (2k docs/vectors): the
     # full sf1 corpus would make them dominate the sweep, but skipping
     # them entirely would let a regression in the twins themselves
     # hide. O(2k²) is milliseconds, so correctness coverage is free.
-    bounded = _run_bounded_twins(spark, qs, sf_dir, skip, errors)
-    times.update(bounded)
+    print(f"\n=== quadratic twins @ {SLICE_ROWS}-row slice ===")
+    twins = [n for n in BOUNDED_TWINS if n in qs]
+    _sweep(spark, qs, _build_slice(sf_dir), twins, times, errors, label="@2k")
     ranked = sorted(times.items(), key=lambda kv: -kv[1])
     print("\n=== slowest 15 (in-sweep) ===")
     for name, t in ranked[:15]:
@@ -149,7 +140,6 @@ def _remeasure_isolated(sf_dir: str, names: list[str]) -> dict[str, float]:
     isolated vs 212 s in-sweep on identical code). A single shared
     re-measure JVM would let earlier queries' cache/GC pressure bleed
     into later ones, which is exactly what 'isolated' must exclude."""
-    import os
     import subprocess
 
     iso_out = "/tmp/sweep_tail_isolated.json"
@@ -189,21 +179,28 @@ def _run_only(sf_dir: str, out: str, names: list[str]) -> None:
     _warm_up(spark, sf_dir)
     qs = mod.queries()
     times: dict[str, float] = {}
-    errors: dict[str, str] = {}
+    errors = {n: "not registered" for n in names if n not in qs}
+    _sweep(spark, qs, sf_dir, [n for n in names if n in qs], times, errors, out=out)
+
+
+def _sweep(spark, qs, sf_dir, names, times, errors, label="", out=None) -> None:
+    """Time each query (construct + execute into the noop sink, the
+    bench protocol's ``queries.run``) into ``times[name + label]``; a
+    failing query is recorded in ``errors`` and the sweep goes on.
+    With ``out``, the partial result is rewritten after every query so
+    an interrupted sweep can resume."""
     for name in names:
-        if name not in qs:
-            errors[name] = "not registered"
-            continue
-        t0 = time.time()
+        key = name + label
         try:
-            n = qs[name](spark, sf_dir).count()
-            times[name] = round(time.time() - t0, 2)
-            print(f"{times[name]:8.2f}s  {n:>9} rows  {name}", flush=True)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"{type(e).__name__}: {e}"[:200]
-            print(f"   ERROR  {name}: {errors[name][:120]}", flush=True)
-    with open(out, "w") as f:
-        json.dump({"times": times, "errors": errors}, f, indent=1, sort_keys=True)
+            r = run(spark, qs[name], sf_dir, "noop")
+            times[key] = round(r.construct_s + r.execute_s, 2)
+            print(f"{times[key]:8.2f}s  {key}", flush=True)
+        except Exception as e:  # noqa: BLE001 — sweep must survive one bad query
+            errors[key] = f"{type(e).__name__}: {e}"[:200]
+            print(f"   ERROR  {key}: {errors[key][:120]}", flush=True)
+        if out:
+            with open(out, "w") as f:
+                json.dump({"times": times, "errors": errors}, f, indent=1, sort_keys=True)
 
 
 #: the documented-quadratic exact twins plus the brute-force ANN
@@ -222,8 +219,6 @@ SLICE_ROWS = 2000
 def _build_slice(sf_dir: str) -> str:
     """Materialize a deterministic 2k-row slice of the text/vector
     tables (the only inputs the twins read)."""
-    import os
-
     import duckdb
 
     # slice dir is keyed on the SOURCE dir name so two scale points
@@ -247,24 +242,6 @@ def _build_slice(sf_dir: str) -> str:
             )
     con.close()
     return slice_dir
-
-
-def _run_bounded_twins(spark, qs, sf_dir, skip, errors) -> dict[str, float]:
-    slice_dir = _build_slice(sf_dir)
-    out: dict[str, float] = {}
-    print(f"\n=== quadratic twins @ {SLICE_ROWS}-row slice ===")
-    for name in BOUNDED_TWINS:
-        if name not in qs:
-            continue
-        t0 = time.time()
-        try:
-            n = qs[name](spark, slice_dir).count()
-            out[f"{name}@2k"] = round(time.time() - t0, 2)
-            print(f"{out[f'{name}@2k']:8.2f}s  {n:>9} rows  {name}@2k", flush=True)
-        except Exception as e:  # noqa: BLE001 — sweep must survive one bad query
-            errors[f"{name}@2k"] = f"{type(e).__name__}: {e}"[:200]
-            print(f"   ERROR  {name}@2k: {errors[f'{name}@2k'][:120]}", flush=True)
-    return out
 
 
 if __name__ == "__main__":
